@@ -1,39 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // per-query repeat count; the recorded time is the MEDIAN of the runs
     // so one GC pause / host-noise spike can't masquerade as a plan
     // regression (round-2 lesson: two unchanged queries "regressed" 10×
     // in a single-run bench)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("graft.stream.shufflePartitions", "8")
-      // Round-15 (verdict #1, the 32-core anti-scaling): with
-      // shuffle.partitions = cpus every SQL exchange sits under the
-      // bypassMergeThreshold default (200), so the bypass writer opened
-      // R files PER MAP TASK (32×32 = 1024 file ops per exchange) — a
-      // kernel-VFS CPU storm from 32 concurrent tiny tasks that made
-      // the 8-core suite beat the 32-core suite outright (measured
-      // -53% CPU / -29% wall on the worst family with the serialized
-      // writer; docs/r15/). 8 = the stream shuffle-partition count:
-      // batch exchanges (≥ cpus reducers) use the serialized sort
-      // writer — one spill file + index per map task, what Spark
-      // already uses for every >200-partition shuffle at production
-      // scale — while the 8-reducer micro-batch shuffles keep the
-      // bypass fast path (A/B: stream family 63.4 s at 0 vs 56.5 s
-      // at 8; docs/r15/stream_iso_32_t{0,8}.log).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen paths so the first measured query doesn't pay
     // session-startup cost (classloading, codegen compiler init)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection harness: prints `explain("formatted")` for selected
   * queries so scan pushdown / broadcast choices / exchange counts can be
   * reviewed (and re-reviewed after changes). Usage:
@@ -13,17 +11,11 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_scan_pushdown", "q_star_join", "q_ffill_bfill",
         "q_candles", "q_minhash_pairs", "q_cosine_topk", "q_asof_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Session.builder()
       // keep the FULL logical plan visible: eager-release operators
       // would otherwise collapse their audit output to an ExistingRDD
       // scan (see operators.Eager)
       .config("graft.eagerRelease", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

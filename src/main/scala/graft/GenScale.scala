@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up data generator (round-12 verdict #6): emits an
@@ -42,13 +42,7 @@ object GenScale {
     val outDir = args.headOption.getOrElse("target/sf1")
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val src = sys.env.getOrElse("SPARK_GRAFT_GEN_SRC", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val only: Option[Set[String]] =

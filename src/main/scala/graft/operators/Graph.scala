@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph ranking over edge frames — the iterative-join compute family
@@ -58,7 +58,7 @@ object Graph {
     * the dial (3-5 captures the ranking for most graphs).
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame =
-    pageRankImpl(edges, iters, damping, stopDp = None)._1
+    pageRankImpl(edges, None, iters, damping, stopDp = None)._1
 
   /** [[pageRank]] with a PROVABLE convergence early-exit (round-10
     * verdict #6): runs at most `maxIters` rounds but stops after round
@@ -78,13 +78,7 @@ object Graph {
     */
   def pageRankConverged(edges: DataFrame, maxIters: Int, damping: Double,
       roundDp: Int): DataFrame =
-    pageRankImpl(edges, maxIters, damping, stopDp = Some(roundDp))._1
-
-  /** Spec hook: [[pageRankConverged]] plus the number of rounds
-    * actually executed. */
-  private[graft] def pageRankConvergedCounting(edges: DataFrame,
-      maxIters: Int, damping: Double, roundDp: Int): (DataFrame, Int) =
-    pageRankImpl(edges, maxIters, damping, stopDp = Some(roundDp))
+    pageRankImpl(edges, None, maxIters, damping, stopDp = Some(roundDp))._1
 
   /** INCREMENTAL PageRank maintenance — re-rank a GROWN graph by
     * warm-starting from a previous rank vector instead of uniform: the
@@ -113,21 +107,38 @@ object Graph {
     */
   def pageRankWarmStart(edges: DataFrame, prevRanks: DataFrame,
       maxIters: Int, damping: Double, roundDp: Int): DataFrame =
-    pageRankImpl(edges, maxIters, damping, stopDp = Some(roundDp),
+    pageRankImpl(edges, None, maxIters, damping, stopDp = Some(roundDp),
       warmInit = Some(prevRanks))._1
 
-  /** Spec hook: [[pageRankWarmStart]] plus rounds actually executed. */
-  private[graft] def pageRankWarmStartCounting(edges: DataFrame,
-      prevRanks: DataFrame, maxIters: Int, damping: Double,
-      roundDp: Int): (DataFrame, Int) =
-    pageRankImpl(edges, maxIters, damping, stopDp = Some(roundDp),
-      warmInit = Some(prevRanks))
-
-  private def pageRankImpl(edges: DataFrame, iters: Int, damping: Double,
-      stopDp: Option[Int], warmInit: Option[DataFrame] = None): (DataFrame, Int) = {
-    require(iters >= 1, s"pageRank: iters must be ≥ 1, got $iters")
+  /** The one PageRank recurrence behind every public entry, returning
+    * (ranks, rounds actually executed) — the round count is what the
+    * converged and warm-start specs assert on. `seeds` picks the
+    * teleport vector tele(v): None is uniform 1/N over the node
+    * universe, Some is 1/|S| on the seeds present in the graph and 0
+    * elsewhere. The recurrence is
+    *   rᵢ₊₁ = spread(1−d) + d·(m + spread(Dᵢ)),
+    * where m is the in-edge contribution sum and spread(x) = x·tele(v).
+    * The uniform spread is written x / N with N an inlined literal, so
+    * its plans keep the constant-folded fast path and each variant keeps
+    * its exact IEEE op order. */
+  private[graft] def pageRankImpl(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, damping: Double, stopDp: Option[Int],
+      warmInit: Option[DataFrame] = None): (DataFrame, Int) = {
+    val op = if (seeds.isEmpty) "pageRank" else "personalizedPageRank"
+    require(iters >= 1, s"$op: iters must be ≥ 1, got $iters")
     require(damping > 0 && damping < 1,
-      s"pageRank: damping must be in (0,1), got $damping")
+      s"$op: damping must be in (0,1), got $damping")
+    // warm-start slack: the a-priori bound on the COLD trajectory's
+    // distance from the fixpoint at round `iters` (proof note on
+    // [[pageRankWarmStart]]); zero for the cold paths, whose proof
+    // bounds against their own trajectory directly
+    val extraSlack = if (warmInit.isDefined) 2.0 * math.pow(damping, iters) else 0.0
+    stopDp.filter(_ => warmInit.isDefined).foreach { dp =>
+      require(extraSlack < 0.45 / math.pow(10.0, dp),
+        s"${op}WarmStart: 2·d^maxIters = $extraSlack cannot clear the " +
+          s"10^-$dp rounding grid — the equality proof can never fire; " +
+          "raise maxIters or lower roundDp")
+    }
     val bc0 = Eager.broadcastSnapshot(edges.sparkSession)
     // Materialize the caller's edge plan ONCE (round-10 verdict #6 —
     // profiling showed the setup consumed the raw plan twice, re-paying
@@ -147,7 +158,7 @@ object Graph {
       .select(col("src"), col("dst"), col("deg")))
     eckRel()
     val nodes = info.select("node")
-    // nodes with no out-edge: their rank re-enters uniformly each round
+    // nodes with no out-edge: their rank re-enters through the teleport
     val dang = info.filter(col("deg") === 0).select("node")
     // ONE orchestration job over the (checkpointed, node-sized) info
     // frame yields the node count AND the dangler check (round 12 —
@@ -165,26 +176,33 @@ object Graph {
     // degenerate empty graph: init ranks would be 1/0 = Infinity and the
     // convergence probe's sum/min aggregates would come back NULL (NPE on
     // getDouble) — fail like the other argument checks instead
-    require(nD > 0, "pageRank: edges frame is empty (no nodes)")
-    // warm-start slack: the a-priori bound on the COLD trajectory's
-    // distance from the fixpoint at round `iters` (proof note on
-    // [[pageRankWarmStart]]); zero for the cold paths, whose proof
-    // bounds against their own trajectory directly
-    val extraSlack = if (warmInit.isDefined) 2.0 * math.pow(damping, iters) else 0.0
-    stopDp.filter(_ => warmInit.isDefined).foreach { dp =>
-      require(extraSlack < 0.45 / math.pow(10.0, dp),
-        s"pageRankWarmStart: 2·d^maxIters = $extraSlack cannot clear the " +
-          s"10^-$dp rounding grid — the equality proof can never fire; " +
-          "raise maxIters or lower roundDp")
+    require(nD > 0, s"$op: edges frame is empty (no nodes)")
+    // (base, tele, spread, release): the frame each round recombines
+    // onto, the teleport value per node, and how a scalar mass spreads
+    // over the nodes by it. The seeded teleport frame is checkpointed
+    // once; seeds absent from the graph drop out of the join.
+    val (base, tele, spread, teleRel) = seeds match {
+      case None =>
+        (nodes, lit(1.0 / nD), (x: Column) => x / lit(nD), () => ())
+      case Some(sd) =>
+        val s = sd.select(col("node")).distinct().join(nodes, Seq("node"))
+        val ns = s.agg(count(lit(1)).as("n_s"))
+        val (t, rel) = Eager.tracked(nodes
+          .join(s.withColumn("__seed", lit(true)), Seq("node"), "left")
+          .crossJoin(broadcast(ns))
+          .select(col("node"),
+            when(col("__seed"), lit(1.0) / col("n_s").cast("double"))
+              .otherwise(lit(0.0)).as("tele")))
+        (t, col("tele"), (x: Column) => x * col("tele"), rel)
     }
     val init = warmInit match {
-      case None => nodes.select(col("node"), lit(1.0 / nD).as("r"))
+      case None => base.select(col("node"), tele.as("r"))
       case Some(prev) =>
         // restrict to the current node universe; nodes the previous
-        // vector never saw start uniform (any start is admissible —
-        // the contraction proof is init-free)
-        nodes.join(prev.select(col("node"), col("r")), Seq("node"), "left")
-          .select(col("node"), coalesce(col("r"), lit(1.0 / nD)).as("r"))
+        // vector never saw start at their teleport value (any start is
+        // admissible — the contraction proof is init-free)
+        base.join(prev.select(col("node"), col("r").as("rp")), Seq("node"), "left")
+          .select(col("node"), coalesce(col("rp"), tele).as("r"))
     }
     def round(r: DataFrame): DataFrame = {
       val m = ed
@@ -192,30 +210,27 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg(sum((col("r") / col("deg").cast("double")).cast("decimal(38,12)"))
           .cast("double").as("m"))
-      val recombined = nodes.join(m, Seq("node"), "left")
-      if (hasDanglers) {
-        val dm = r.join(dang, Seq("node"))
-          .agg(coalesce(sum(col("r").cast("decimal(38,12)")),
-            lit(0).cast("decimal(38,12)")).cast("double").as("dmass"))
-        recombined.crossJoin(broadcast(dm))
-          .select(col("node"),
-            ((lit(1.0) - lit(damping)) / lit(nD) +
-              lit(damping) * (coalesce(col("m"), lit(0.0)) +
-                col("dmass") / lit(nD))).as("r"))
-      } else recombined
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) / lit(nD) +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
+      val recombined = base.join(m, Seq("node"), "left")
+      val inflow = coalesce(col("m"), lit(0.0))
+      val (joined, mass) =
+        if (hasDanglers) {
+          val dm = r.join(dang, Seq("node"))
+            .agg(coalesce(sum(col("r").cast("decimal(38,12)")),
+              lit(0).cast("decimal(38,12)")).cast("double").as("dmass"))
+          (recombined.crossJoin(broadcast(dm)), inflow + spread(col("dmass")))
+        } else (recombined, inflow)
+      joined.select(col("node"),
+        (spread(lit(1.0) - lit(damping)) + lit(damping) * mass).as("r"))
     }
     val (r, i, relPrev) =
       iterate(init, round, iters, damping, stopDp, chainable = !hasDanglers,
         extraSlack = extraSlack, requireProof = warmInit.isDefined)
     // the terminal checkpoint frees EVERYTHING internal (last round's
-    // frame, edges, node info) deterministically; the caller / harness
-    // owns the terminal's own node-sized blocks. The rounds also left
-    // one broadcast exchange each (rank/mass frames) — dead now that
-    // the terminal is an RDD scan, destroyed by handle.
-    val out = Eager.terminalReleasing(r, relPrev, edRel, infoRel)
+    // frame, edges, node info, teleport) deterministically; the caller /
+    // harness owns the terminal's own node-sized blocks. The rounds also
+    // left one broadcast exchange each (rank/mass frames) — dead now
+    // that the terminal is an RDD scan, destroyed by handle.
+    val out = Eager.terminalReleasing(r, relPrev, edRel, infoRel, teleRel)
     Eager.releaseBroadcastsSince(edges.sparkSession, bc0)
     (out, i)
   }
@@ -378,28 +393,7 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int, damping: Double): DataFrame =
-    pprImpl(edges, seeds, iters, damping, stopDp = None)._1
-
-  /** [[personalizedPageRank]] with a SALTED hub combine — the round-13
-    * verdict #4 A/B lever: the per-round dst-aggregate spreads each hub
-    * node over `nSalts` reducers (stage 1 on (dst, salt), stage 2
-    * merges per dst; decimal sums are exact and associative, so the
-    * result is bit-identical to the unsalted round — asserted in
-    * GraphSpec). Kept as a separate entry so production call sites and
-    * plan fingerprints stay on the unsalted path unless the measured
-    * A/B says otherwise. MEASURED, round 15 (BENCH_NOTES round-15
-    * table; docs/r15/ppr_salt_ab_sf{01,1}.log — graft.PprSaltAB,
-    * RUNS=3 medians, local[32]): unsalted 3.52 s vs salted 4.52 (8
-    * salts) / 5.03 (32) at sf0.1, and 15.7 vs 23.1 / 24.1 at sf1 —
-    * map-side partial aggregation already absorbs the supplier-hub
-    * combine at both scales; salting only adds a second exchange.
-    * The variant stays as the documented-rejected lever so the claim
-    * remains reproducible. */
-  private[graft] def personalizedPageRankSalted(edges: DataFrame,
-      seeds: DataFrame, iters: Int, damping: Double,
-      nSalts: Int): DataFrame =
-    pprImpl(edges, seeds, iters, damping, stopDp = None,
-      saltHubs = nSalts)._1
+    pageRankImpl(edges, Some(seeds), iters, damping, stopDp = None)._1
 
   /** [[personalizedPageRank]] with the PROVABLE convergence early-exit
     * of [[pageRankConverged]]: the PPR recurrence's linear part is the
@@ -410,14 +404,8 @@ object Graph {
     * which is exactly what the full-unroll oracle compares. */
   def personalizedPageRankConverged(edges: DataFrame, seeds: DataFrame,
       maxIters: Int, damping: Double, roundDp: Int): DataFrame =
-    pprImpl(edges, seeds, maxIters, damping, stopDp = Some(roundDp))._1
-
-  /** Spec hook: [[personalizedPageRankConverged]] plus the number of
-    * rounds actually executed. */
-  private[graft] def personalizedPageRankConvergedCounting(
-      edges: DataFrame, seeds: DataFrame, maxIters: Int, damping: Double,
-      roundDp: Int): (DataFrame, Int) =
-    pprImpl(edges, seeds, maxIters, damping, stopDp = Some(roundDp))
+    pageRankImpl(edges, Some(seeds), maxIters, damping,
+      stopDp = Some(roundDp))._1
 
   /** [[pageRankWarmStart]] for PERSONALIZED PageRank: the PPR map is
     * the same damping × column-stochastic contraction (teleport only
@@ -428,112 +416,8 @@ object Graph {
   def personalizedPageRankWarmStart(edges: DataFrame, seeds: DataFrame,
       prevRanks: DataFrame, maxIters: Int, damping: Double,
       roundDp: Int): DataFrame =
-    pprImpl(edges, seeds, maxIters, damping, stopDp = Some(roundDp),
-      warmInit = Some(prevRanks))._1
-
-  /** Spec hook: [[personalizedPageRankWarmStart]] plus rounds run. */
-  private[graft] def personalizedPageRankWarmStartCounting(
-      edges: DataFrame, seeds: DataFrame, prevRanks: DataFrame,
-      maxIters: Int, damping: Double, roundDp: Int): (DataFrame, Int) =
-    pprImpl(edges, seeds, maxIters, damping, stopDp = Some(roundDp),
-      warmInit = Some(prevRanks))
-
-  private def pprImpl(edges: DataFrame, seeds: DataFrame,
-      iters: Int, damping: Double, stopDp: Option[Int],
-      warmInit: Option[DataFrame] = None,
-      saltHubs: Int = 0): (DataFrame, Int) = {
-    require(iters >= 1, s"personalizedPageRank: iters must be ≥ 1, got $iters")
-    require(damping > 0 && damping < 1,
-      s"personalizedPageRank: damping must be in (0,1), got $damping")
-    val bc0 = Eager.broadcastSnapshot(edges.sparkSession)
-    // same one-pass setup as [[pageRank]] (edges materialized once,
-    // node universe from one aggregation — see [[nodeOutDegrees]])
-    val (eck, eckRel) = Eager.tracked(edges)
-    val (info, infoRel) = Eager.tracked(nodeOutDegrees(eck))
-    val (ed, edRel) = Eager.tracked(eck
-      .join(info.filter(col("deg") > 0)
-        .select(col("node").as("src"), col("deg")), Seq("src"))
-      .select(col("src"), col("dst"), col("deg")))
-    eckRel()
-    val nodes = info.select("node")
-    val dang = info.filter(col("deg") === 0).select("node")
-    // ONE orchestration job for the degenerate-empty guard AND the
-    // dangler fast path (round 12 — was two driver jobs; see
-    // [[pageRank]]): no danglers → the correction term is exactly
-    // +0.0·tele, skip its per-round join + aggregate
-    val infoStats = info.agg(count(lit(1)),
-      coalesce(sum(when(col("deg") === 0, 1L).otherwise(0L)), lit(0L))).head()
-    require(infoStats.getLong(0) > 0,
-      "personalizedPageRank: edges frame is empty (no nodes)")
-    val hasDanglers = infoStats.getLong(1) > 0
-    val s = seeds.select(col("node")).distinct().join(nodes, Seq("node"))
-    val ns = s.agg(count(lit(1)).as("n_s"))
-    val (tele, teleRel) = Eager.tracked(nodes
-      .join(s.withColumn("__seed", lit(true)), Seq("node"), "left")
-      .crossJoin(broadcast(ns))
-      .select(col("node"),
-        when(col("__seed"), lit(1.0) / col("n_s").cast("double"))
-          .otherwise(lit(0.0)).as("tele")))
-    // warm-start slack + guard: same contract as [[pageRankImpl]]
-    val extraSlack = if (warmInit.isDefined) 2.0 * math.pow(damping, iters) else 0.0
-    stopDp.filter(_ => warmInit.isDefined).foreach { dp =>
-      require(extraSlack < 0.45 / math.pow(10.0, dp),
-        s"personalizedPageRankWarmStart: 2·d^maxIters = $extraSlack cannot " +
-          s"clear the 10^-$dp rounding grid — the equality proof can never " +
-          "fire; raise maxIters or lower roundDp")
-    }
-    val init = warmInit match {
-      case None => tele.select(col("node"), col("tele").as("r"))
-      case Some(prev) =>
-        // restrict to the node universe; unseen nodes start at their
-        // teleport value (any start is admissible — init-free proof)
-        tele.join(prev.select(col("node"), col("r").as("rp")),
-            Seq("node"), "left")
-          .select(col("node"), coalesce(col("rp"), col("tele")).as("r"))
-    }
-    def round(r: DataFrame): DataFrame = {
-      val contrib = ed
-        .join(r.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst"),
-          (col("r") / col("deg").cast("double")).cast("decimal(38,12)")
-            .as("cc"),
-          pmod(hash(col("src")), lit(math.max(saltHubs, 1))).as("__salt"))
-      // decimal sums are exact + associative, so the salted two-stage
-      // combine is bit-identical to the one-stage aggregate
-      // (GraphSpec); the double cast happens once, after the final merge
-      val m =
-        if (saltHubs > 1)
-          contrib
-            .groupBy(col("dst"), col("__salt"))
-            .agg(sum(col("cc")).as("pm"))
-            .groupBy(col("dst").as("node"))
-            .agg(sum(col("pm")).cast("double").as("m"))
-        else
-          contrib.groupBy(col("dst").as("node"))
-            .agg(sum(col("cc")).cast("double").as("m"))
-      val recombined = tele.join(m, Seq("node"), "left")
-      if (hasDanglers) {
-        val dm = r.join(dang, Seq("node"))
-          .agg(coalesce(sum(col("r").cast("decimal(38,12)")),
-            lit(0).cast("decimal(38,12)")).cast("double").as("dmass"))
-        recombined.crossJoin(broadcast(dm))
-          .select(col("node"),
-            ((lit(1.0) - lit(damping)) * col("tele") +
-              lit(damping) * (coalesce(col("m"), lit(0.0)) +
-                col("dmass") * col("tele"))).as("r"))
-      } else recombined
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) * col("tele") +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-    }
-    val (r, i, relPrev) =
-      iterate(init, round, iters, damping, stopDp, chainable = !hasDanglers,
-        extraSlack = extraSlack, requireProof = warmInit.isDefined)
-    val out =
-      Eager.terminalReleasing(r, relPrev, edRel, infoRel, teleRel)
-    Eager.releaseBroadcastsSince(edges.sparkSession, bc0)
-    (out, i)
-  }
+    pageRankImpl(edges, Some(seeds), maxIters, damping,
+      stopDp = Some(roundDp), warmInit = Some(prevRanks))._1
 
   /** Fixed-iteration label propagation over a directed edge frame —
     * the weak-supervision primitive for training-data labeling: a small

@@ -1195,8 +1195,7 @@ object Streaming {
     val setsE = spark.read.parquet(s"$indexPath/sets").persist(lvl)
     try {
       val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_MFPT", "1"))
+        .option("maxFilesPerTrigger", "1")
         .parquet(land)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * All AQE thresholds used here are runtime-settable, so the shared test
   * session is reconfigured and restored rather than rebuilt.
   */
-class AqeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AqeSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import graft.operators.{Corpus, TextAnalysis}
 /** Corpus-health operators: CCNet boilerplate stripping, Zipf-slope
   * fit, CCNet head/middle/tail LM-score terciles.
   */
-class CorpusHealthSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusHealthSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

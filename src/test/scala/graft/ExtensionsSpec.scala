@@ -19,10 +19,7 @@ class ExtensionsSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
+      val spark = SharedSession.builder
         .withExtensions(new graft.plans.GraftExtensions)
         .getOrCreate()
       val got = spark.sql(

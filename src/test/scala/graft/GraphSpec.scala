@@ -1,24 +1,82 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
 
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 
   private def sym(pairs: (String, String)*) =
     (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
+
+  test("PageRank family ranks match golden IEEE bit patterns") {
+    // every other case compares with a tolerance; this one pins the
+    // exact doubles, so a refactor that reorders one floating-point op
+    // in any recurrence (uniform or seeded teleport, with or without
+    // the dangling completion, fixed or converged) fails here
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.as[(String, Double)].collect().toSeq.sortBy(_._1)
+        .map { case (n, r) => n -> java.lang.Double.doubleToRawLongBits(r) }
+    val symE = sym(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"))
+    val dirE = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("e", "a"))
+      .toDF("src", "dst") // d is a sink, e has no in-edge
+    val hubE = sym(((1 to 12).map(i => ("hub" + (i % 3), f"leaf$i%02d")) ++
+      Seq(("hub0", "hub1"), ("hub1", "hub2"), ("leaf01", "leaf05"))): _*)
+    val got = Seq(
+      "pageRank/sym" -> bits(Graph.pageRank(symE, 5, 0.85)),
+      "ppr/sym" -> bits(Graph.personalizedPageRank(symE,
+        Seq("a", "d").toDF("node"), 5, 0.85)),
+      "pageRank/dangling" -> bits(Graph.pageRank(dirE, 5, 0.85)),
+      "ppr/dangling" -> bits(Graph.personalizedPageRank(dirE,
+        Seq("a").toDF("node"), 5, 0.85)),
+      "pprConverged" -> bits(Graph.personalizedPageRankConverged(hubE,
+        Seq("hub0", "hub1").toDF("node"), 40, 0.3, 6)),
+      "pageRankWarmStart" -> bits(Graph.pageRankWarmStart(hubE,
+        Graph.pageRank(hubE, 2, 0.3), 30, 0.3, 6)))
+    // recorded with the earlier code, which kept separate recurrences
+    // for the uniform and the seeded teleport
+    val want = Seq(
+      "pageRank/sym" -> Seq(
+        "a" -> 0x3fc882c24f0c3253L, "b" -> 0x3fc882c24f0c3253L,
+        "c" -> 0x3fd1d41af3a14cecL, "d" -> 0x3fcc21338804e7c7L,
+        "e" -> 0x3fbe6223e54122b6L),
+      "ppr/sym" -> Seq(
+        "a" -> 0x3fcaca25d42eabbaL, "b" -> 0x3fc4d8c7a96ba779L,
+        "c" -> 0x3fd3cd5b24904ed3L, "d" -> 0x3fc7f4e3873b585cL,
+        "e" -> 0x3fc0cd78b20a2e6dL),
+      "pageRank/dangling" -> Seq(
+        "a" -> 0x3fc48e00229101ccL, "b" -> 0x3fc3d9bfbf79a445L,
+        "c" -> 0x3fd219fb2d09dcceL, "d" -> 0x3fd4309813cd045dL,
+        "e" -> 0x3fb60633388f2f32L),
+      "ppr/dangling" -> Seq(
+        "a" -> 0x3fce1b5b2d4d4026L, "b" -> 0x3fc8dd3c36113404L,
+        "c" -> 0x3fd6ffd7b2031cebL, "d" -> 0x3fcb07b9389b5200L,
+        "e" -> 0x0000000000000000L),
+      "pprConverged" -> Seq(
+        "hub0" -> 0x3fd980f8cfa67f0aL, "hub1" -> 0x3fd959b82f71f94bL,
+        "hub2" -> 0x3f9625a447eb42d1L, "leaf01" -> 0x3f94f37b142310dfL,
+        "leaf02" -> 0x3f5542da9484cc2fL, "leaf03" -> 0x3f987bd02ffc2ecfL,
+        "leaf04" -> 0x3f9447c68dd893e0L, "leaf05" -> 0x3f71e2cd3440c399L,
+        "leaf06" -> 0x3f987bd02ffc2ecfL, "leaf07" -> 0x3f9447c68dd893e0L,
+        "leaf08" -> 0x3f5542da9484cc2fL, "leaf09" -> 0x3f987bd02ffc2ecfL,
+        "leaf10" -> 0x3f9447c68dd893e0L, "leaf11" -> 0x3f5542da9484cc2fL,
+        "leaf12" -> 0x3f987bd02ffc2ecfL),
+      "pageRankWarmStart" -> Seq(
+        "hub0" -> 0x3fbdeeda982110bdL, "hub1" -> 0x3fbde753ddfbf155L,
+        "hub2" -> 0x3fbc1d0c5ceb8347L, "leaf01" -> 0x3fafafcab71e8113L,
+        "leaf02" -> 0x3fab4456e05e1562L, "leaf03" -> 0x3fab7c3c749d2aa2L,
+        "leaf04" -> 0x3faae239d02b6944L, "leaf05" -> 0x3fb0028ddf5d0352L,
+        "leaf06" -> 0x3fab7c3c749d2aa2L, "leaf07" -> 0x3faae239d02b6944L,
+        "leaf08" -> 0x3fab4456e05e1562L, "leaf09" -> 0x3fab7c3c749d2aa2L,
+        "leaf10" -> 0x3faae239d02b6944L, "leaf11" -> 0x3fab4456e05e1562L,
+        "leaf12" -> 0x3fab7c3c749d2aa2L))
+    want.foreach { case (k, w) =>
+      assert(got.toMap.apply(k) === w, s"$k ranks drifted from the golden bits")
+    }
+  }
 
   test("pageRank on a symmetric pair splits mass evenly and conserves it") {
     val r = Graph.pageRank(sym(("a", "b")), iters = 3, damping = 0.85)
@@ -99,23 +157,6 @@ class GraphSpec extends AnyFunSuite {
     assert(r2("a") > 0.2 && !r2.values.exists(_.isNaN))
   }
 
-  test("salted PPR hub combine is bit-identical to the unsalted round") {
-    // star hub h with many spokes + a side chain — the salted two-stage
-    // combine (decimal sums, exact + associative) must reproduce the
-    // unsalted aggregate BIT-for-bit at every salt count
-    val e0 = ((1 to 40).map(i => (s"n$i", "h")) ++
-      Seq(("h", "t"), ("t", "u"))).toDF("src", "dst")
-    val edges = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Seq("n1", "t").toDF("node")
-    val plain = Graph.personalizedPageRank(edges, seeds, iters = 4,
-      damping = 0.85).as[(String, Double)].collect().toMap
-    for (nSalts <- Seq(2, 8, 32)) {
-      val salted = Graph.personalizedPageRankSalted(edges, seeds, iters = 4,
-        damping = 0.85, nSalts = nSalts).as[(String, Double)].collect().toMap
-      assert(salted === plain, s"nSalts=$nSalts diverged")
-    }
-  }
-
   test("labelPropagation spreads seed labels by majority with min-label ties") {
     // chain a→b→c: b labeled round 1, c round 2; tie at z (one vote
     // each from x=1, y=2) resolves to the smaller label; seeds fixed
@@ -187,8 +228,8 @@ class GraphSpec extends AnyFunSuite {
     val edges = sym((1 to 40).map(i => ("hub" + (i % 3), f"leaf$i%02d")): _*)
     val maxIters = 40
     val dp = 6
-    val (conv, rounds) = Graph.pageRankConvergedCounting(
-      edges, maxIters, damping = 0.3, roundDp = dp)
+    val (conv, rounds) = Graph.pageRankImpl(
+      edges, None, maxIters, damping = 0.3, stopDp = Some(dp))
     assert(rounds < maxIters,
       s"expected a provable early exit, ran all $rounds rounds")
     val got = conv.select(col("node"), round(col("r"), dp).as("rank"))
@@ -207,8 +248,8 @@ class GraphSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val maxIters = 40
     val dp = 6
-    val (conv, rounds) = Graph.pageRankConvergedCounting(
-      edges, maxIters, damping = 0.3, roundDp = dp)
+    val (conv, rounds) = Graph.pageRankImpl(
+      edges, None, maxIters, damping = 0.3, stopDp = Some(dp))
     assert(rounds < maxIters,
       s"expected a provable early exit, ran all $rounds rounds")
     val got = conv.select(col("node"), round(col("r"), dp).as("rank"))
@@ -225,8 +266,8 @@ class GraphSpec extends AnyFunSuite {
     val seeds = Seq("hub0", "hub1").toDF("node")
     val maxIters = 40
     val dp = 6
-    val (conv, rounds) = Graph.personalizedPageRankConvergedCounting(
-      edges, seeds, maxIters, damping = 0.3, roundDp = dp)
+    val (conv, rounds) = Graph.pageRankImpl(
+      edges, Some(seeds), maxIters, damping = 0.3, stopDp = Some(dp))
     assert(rounds < maxIters,
       s"expected a provable early exit, ran all $rounds rounds")
     val got = conv.select(col("node"), round(col("r"), dp).as("rank"))
@@ -241,8 +282,8 @@ class GraphSpec extends AnyFunSuite {
   test("personalizedPageRankConverged on a slow-converging graph runs every round") {
     val edges = sym(("a", "b"), ("b", "c"), ("c", "d"))
     val seeds = Seq("a").toDF("node")
-    val (conv, rounds) = Graph.personalizedPageRankConvergedCounting(
-      edges, seeds, maxIters = 4, damping = 0.95, roundDp = 9)
+    val (conv, rounds) = Graph.pageRankImpl(
+      edges, Some(seeds), iters = 4, damping = 0.95, stopDp = Some(9))
     assert(rounds === 4)
     val got = conv.as[(String, Double)].collect().toMap
     val full = Graph.personalizedPageRank(edges, seeds, 4, 0.95)
@@ -255,8 +296,8 @@ class GraphSpec extends AnyFunSuite {
     // the proof cannot fire within 4 rounds, so all 4 must run and the
     // result must equal the plain fixed-iteration operator exactly
     val edges = sym(("a", "b"), ("b", "c"), ("c", "d"))
-    val (conv, rounds) = Graph.pageRankConvergedCounting(
-      edges, maxIters = 4, damping = 0.95, roundDp = 9)
+    val (conv, rounds) = Graph.pageRankImpl(
+      edges, None, iters = 4, damping = 0.95, stopDp = Some(9))
     assert(rounds === 4)
     val got = conv.as[(String, Double)].collect().toMap
     val full = Graph.pageRank(edges, 4, 0.95)
@@ -276,10 +317,10 @@ class GraphSpec extends AnyFunSuite {
     val full = (1 to 40).map(i => ("hub" + (i % 3), f"leaf$i%02d"))
     val old = full.filter(_._1 != "hub2")
     val prev = Graph.pageRankConverged(sym(old: _*), maxIters, d, dp)
-    val (warm, warmRounds) = Graph.pageRankWarmStartCounting(
-      sym(full: _*), prev, maxIters, d, dp)
-    val (_, coldRounds) = Graph.pageRankConvergedCounting(
-      sym(full: _*), maxIters, d, dp)
+    val (warm, warmRounds) = Graph.pageRankImpl(
+      sym(full: _*), None, maxIters, d, Some(dp), Some(prev))
+    val (_, coldRounds) = Graph.pageRankImpl(
+      sym(full: _*), None, maxIters, d, Some(dp))
     assert(warmRounds <= coldRounds,
       s"warm start should never need MORE rounds: warm=$warmRounds cold=$coldRounds")
     val got = warm.select(col("node"), round(col("r"), dp).as("rank"))
@@ -295,8 +336,8 @@ class GraphSpec extends AnyFunSuite {
     // RESTART from the same graph's converged ranks starts at the
     // fixpoint — δ₁ is already microscopic and the proof fires on the
     // very first probe, where the cold run needs double-digit rounds
-    val (warm2, restartRounds) = Graph.pageRankWarmStartCounting(
-      sym(full: _*), warm, maxIters, d, dp)
+    val (warm2, restartRounds) = Graph.pageRankImpl(
+      sym(full: _*), None, maxIters, d, Some(dp), Some(warm))
     assert(restartRounds <= 2,
       s"fixpoint restart should prove out in ≤2 rounds, took $restartRounds (cold: $coldRounds)")
     assert(restartRounds < coldRounds)
@@ -313,8 +354,8 @@ class GraphSpec extends AnyFunSuite {
     val seeds = Seq("hub0", "hub1").toDF("node")
     val prev = Graph.personalizedPageRankConverged(
       sym(full.filter(_._1 != "hub2"): _*), seeds, maxIters, d, dp)
-    val (warm, warmRounds) = Graph.personalizedPageRankWarmStartCounting(
-      sym(full: _*), seeds, prev, maxIters, d, dp)
+    val (warm, warmRounds) = Graph.pageRankImpl(
+      sym(full: _*), Some(seeds), maxIters, d, Some(dp), Some(prev))
     val got = warm.select(col("node"), round(col("r"), dp).as("rank"))
       .as[(String, Double)].collect().toMap
     val cold18 = Graph.personalizedPageRank(sym(full: _*), seeds, maxIters, d)
@@ -322,12 +363,12 @@ class GraphSpec extends AnyFunSuite {
       .as[(String, Double)].collect().toMap
     assert(got === cold18,
       "warm-started PPR diverges from the cold fixed-iteration oracle")
-    val (_, coldRounds) = Graph.personalizedPageRankConvergedCounting(
-      sym(full: _*), seeds, maxIters, d, dp)
+    val (_, coldRounds) = Graph.pageRankImpl(
+      sym(full: _*), Some(seeds), maxIters, d, Some(dp))
     assert(warmRounds <= coldRounds)
     // fixpoint restart: proof fires on the first probe
-    val (warm2, restartRounds) = Graph.personalizedPageRankWarmStartCounting(
-      sym(full: _*), seeds, warm, maxIters, d, dp)
+    val (warm2, restartRounds) = Graph.pageRankImpl(
+      sym(full: _*), Some(seeds), maxIters, d, Some(dp), Some(warm))
     assert(restartRounds <= 2 && restartRounds < coldRounds,
       s"fixpoint restart took $restartRounds rounds (cold: $coldRounds)")
     assert(warm2.select(col("node"), round(col("r"), dp).as("rank"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,15 +14,7 @@ import graft.sources.Sources
   * than exact per-row outputs (exact coefficients may legally vary
   * with partition-level float summation order).
   */
-class MLSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MLSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
 

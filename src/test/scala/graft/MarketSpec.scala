@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import graft.operators.Analytics
 /** Market-analytics pack: VWAP, drawdown, RSI, Bollinger bands —
   * closed-form fixtures with hand-computed expectations.
   */
-class MarketSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MarketSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

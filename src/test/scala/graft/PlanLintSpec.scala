@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Automated no-scale-killer sweep: every batch query's PHYSICAL plan
@@ -32,15 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * probes) still yield a lintable terminal plan — the lint covers the
   * frame each query RETURNS, the one the driver materializes.
   */
-class PlanLintSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class PlanLintSpec extends AnyFunSuite with SharedSession {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val fpPath = java.nio.file.Paths.get("docs", "PLAN_FINGERPRINTS.json")

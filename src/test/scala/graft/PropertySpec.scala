@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.operators.{Dedup, Fill, Skew}
   * dedup idempotence, anti-join-load idempotence, fill completeness,
   * clean-text output alphabet, salted-agg equivalence.
   */
-class PropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PropertySpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

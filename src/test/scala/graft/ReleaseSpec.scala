@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,14 +19,7 @@ import graft.operators.{Graph, NearDup}
   * persist/localCheckpoint that isn't released turns this red
   * immediately instead of three rounds later in a driver bench.
   */
-class ReleaseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleaseSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

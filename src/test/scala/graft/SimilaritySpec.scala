@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import graft.operators.Similarity
   * built-in higher-order composition it replaces (same per-element
   * double multiply, same Cast rounding to DECIMAL(30,12), exact sum).
   */
-class SimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilaritySpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +11,7 @@ import graft.operators.{Analytics, Dedup, Fill, Transforms}
   * covering the edge cases the reference encodes (SURVEY.md §5.2):
   * missing columns, empty input, all-null fill groups, text cleaning.
   */
-class TransformsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TransformsSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +14,7 @@ import graft.schemas.Warehouse.StockBar
   * to the declared sink types, missing-column behavior, uniqueness
   * invariants, and the Dataset[StockBar] encoder round-trip.
   */
-class WarehouseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarehouseSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 
