@@ -143,10 +143,10 @@ object Analytics {
     * optionally bounded by `toleranceSeconds` (no match within the bound
     * → null-extended, like merge_asof's `tolerance`).
     *
-    * Same plan shape as [[asOfJoin]]: union → ONE shuffle/sort on the
-    * key → window frames over that single sort (backward candidate via
-    * an unbounded-preceding `last`, forward candidate via an
-    * unbounded-following `first`), then per-row candidate arbitration —
+    * Same plan shape as [[asOfJoin]]: union → ONE shuffle on the
+    * key → running window frames over that partitioning (backward
+    * candidate via [[Fill.ffill]], forward candidate via [[Fill.bfill]]
+    * on the mirrored order), then per-row candidate arbitration —
     * no range join, no per-probe quote scan, scales like a sort-merge
     * join. The quote's ts/tiebreak ride along in a packed struct so
     * tolerance and nearest-arbitration are pure column ops.
@@ -170,21 +170,19 @@ object Analytics {
           col(valueCol).as("v")).as("__q"))
     val p = probe.withColumn("__side", lit(1))
     val unioned = q.unionByName(p, allowMissingColumns = true)
-    val ord = Window.partitionBy(col(keyCol))
     // backward: quote sorts BEFORE probe at equal ts (side 0 < 1) so an
     // exactly-simultaneous quote is visible; forward: probe sorts before
     // quote via side DESC so the same quote is visible forward too
     // __q.tb (null on probe rows, nulls-first) makes the order among
-    // equal-ts quotes total: backward's `last` picks the LARGEST
-    // tiebreak, forward's `first` the smallest — both deterministic
-    val wb = ord.orderBy(col(tsCol), col("__side"), col("__q.tb").asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = ord.orderBy(col(tsCol), col("__side").desc, col("__q.tb").asc_nulls_last)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // equal-ts quotes total: backward's fill picks the LARGEST
+    // tiebreak, forward's the smallest — both deterministic
+    val key = Seq(col(keyCol))
     val qOnly = when(col("__side") === 0, col("__q"))
     val withCand = unioned
-      .withColumn("__b", last(qOnly, ignoreNulls = true).over(wb))
-      .withColumn("__f", first(qOnly, ignoreNulls = true).over(wf))
+      .withColumn("__b", Fill.ffill(key,
+        Seq(col(tsCol), col("__side"), col("__q.tb").asc_nulls_first))(qOnly))
+      .withColumn("__f", Fill.bfill(key,
+        Seq(col(tsCol), col("__side").desc, col("__q.tb").asc_nulls_last))(qOnly))
       .filter(col("__side") === 1)
     val dB = unix_micros(col(tsCol)) - unix_micros(col("__b.ts"))
     val dF = unix_micros(col("__f.ts")) - unix_micros(col(tsCol))

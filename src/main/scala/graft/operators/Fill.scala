@@ -3,16 +3,28 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SortKeys
 
 /** Grouped forward/backward fill (SURVEY.md §2.7 W1/W2 — the reference's
   * only true window computation; /root/reference/data_pipeline/tasks/
   * transformation.py:206-218).
   *
   * The eager two-pass pandas `groupby().ffill()` / `.bfill()` becomes two
-  * window projections over ONE window partitioning — Spark plans a single
-  * sort+shuffle on (partition keys, order keys) and evaluates both frames
-  * in the same WindowExec, so scale cost is one exchange regardless of how
-  * many columns are filled.
+  * RUNNING windows over ONE window partitioning: Spark plans a single
+  * shuffle on the partition keys, sorts each partition by the order
+  * keys for the forward pass and by the mirrored keys for the backward
+  * pass, and evaluates every filled column's frame of one direction in
+  * the same WindowExec — one exchange regardless of how many columns
+  * are filled.
+  *
+  * No frame here ends at UNBOUNDED FOLLOWING. Spark evaluates a
+  * `currentRow..unboundedFollowing` frame by re-aggregating the rest of
+  * the group for every row, O(n²) per group (a 5,000-bar symbol costs
+  * ~12.5 M row visits), while an `unboundedPreceding..currentRow` frame
+  * is one incremental pass. So "first non-null at or after" is computed
+  * as "last non-null at or before" over the mirrored order
+  * ([[bfill]]); PlanLintSpec fails any plan that brings the quadratic
+  * frame back.
   */
 object Fill {
 
@@ -25,12 +37,20 @@ object Fill {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
   /** W2 — per-group backward fill: first non-null value at or after the
-    * current row (transformation.py:215).
+    * current row (transformation.py:215), evaluated as "last non-null at
+    * or before" over the mirrored order (every key reversed, asc nulls
+    * first ↔ desc nulls last), so it is a running frame too. The frame
+    * is a RANGE frame, so it takes in the row's whole tie group: a
+    * ROWS frame would miss a tied peer that the sort, stable in both
+    * directions, keeps behind the row, and ffill-then-bfill could then
+    * leave a null that no row order gives. Equal to the
+    * `first(c, ignoreNulls) over currentRow..unboundedFollowing` form
+    * whenever `orderBy` is a total order within each group.
     */
   def bfill(partitionBy: Seq[Column], orderBy: Seq[Column])(c: Column): Column =
-    first(c, ignoreNulls = true).over(
-      Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    last(c, ignoreNulls = true).over(
+      Window.partitionBy(partitionBy: _*).orderBy(orderBy.map(SortKeys.reverse): _*)
+        .rangeBetween(Window.unboundedPreceding, Window.currentRow))
 
   /** ffill-then-bfill (the reference's exact order: transformation.py:
     * 213-215): mid-series nulls take the previous value, leading nulls take
@@ -40,15 +60,19 @@ object Fill {
   def ffillBfill(partitionBy: Seq[Column], orderBy: Seq[Column])(c: Column): Column =
     coalesce(ffill(partitionBy, orderBy)(c), bfill(partitionBy, orderBy)(c))
 
-  /** Apply [[ffillBfill]] to several columns in place. */
+  /** Apply [[ffillBfill]] to several columns in place. All columns go
+    * into ONE projection, so every forward frame shares one WindowExec
+    * and every backward frame another: two sorts for any number of
+    * columns (a projection per column would alternate the two orders
+    * and sort twice per column).
+    */
   def fillColumns(
       df: DataFrame,
       partitionBy: Seq[Column],
       orderBy: Seq[Column],
       cols: Seq[String]): DataFrame =
-    cols.foldLeft(df) { (d, name) =>
-      d.withColumn(name, ffillBfill(partitionBy, orderBy)(col(name)))
-    }
+    df.withColumns(cols.map(name =>
+      name -> ffillBfill(partitionBy, orderBy)(col(name))).toMap)
 
   /** W1+ — calendar-spine gap filling: materialize EVERY hour between a
     * group's first and last observation, left-join the observed hourly
@@ -93,8 +117,9 @@ object Fill {
     * leading nulls backward-fill, trailing nulls forward-fill.
     *
     * Plan shape: FOUR window projections (prev/next value and the
-    * timestamps they occurred at) over the SAME partitioning/ordering —
-    * one sort+exchange, one WindowExec, no self-joins. `timeMicros`
+    * timestamps they occurred at) over the SAME partitioning — one
+    * exchange, two sorts (order and mirrored order), two running
+    * WindowExecs, no self-joins. `timeMicros`
     * must be an integral epoch column (exact on both engines; a
     * timestamp→double cast would round differently at the µs digit).
     * The blend is a fixed IEEE double op sequence on exact integer
@@ -103,14 +128,11 @@ object Fill {
     */
   def interpolateLinear(partitionBy: Seq[Column], orderBy: Seq[Column])(
       value: Column, timeMicros: Column): Column = {
-    val before = Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val after = Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val prevV = last(value, ignoreNulls = true).over(before)
-    val prevT = last(when(value.isNotNull, timeMicros), ignoreNulls = true).over(before)
-    val nextV = first(value, ignoreNulls = true).over(after)
-    val nextT = first(when(value.isNotNull, timeMicros), ignoreNulls = true).over(after)
+    val valueTime = when(value.isNotNull, timeMicros)
+    val prevV = ffill(partitionBy, orderBy)(value)
+    val prevT = ffill(partitionBy, orderBy)(valueTime)
+    val nextV = bfill(partitionBy, orderBy)(value)
+    val nextT = bfill(partitionBy, orderBy)(valueTime)
     when(value.isNotNull, value)
       .when(prevV.isNull, nextV) // leading nulls → bfill
       .when(nextV.isNull, prevV) // trailing nulls → ffill

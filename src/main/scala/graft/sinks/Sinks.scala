@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -90,6 +90,14 @@ object Sinks {
     * `path`; returns the number of rows appended. Transactionality note:
     * parquet append is not atomic — at deployment scale this is the
     * foreachBatch body over a table format with MERGE semantics.
+    *
+    * One pass: the anti-join result is written directly while an
+    * `Observation` counts the rows it writes — no persisted anti-join,
+    * no separate count job. The table's key columns are selected by
+    * name, so a key column the table lacks fails analysis instead of
+    * matching nothing and re-appending every row. A call that finds
+    * nothing new still commits one zero-row file (Spark's writer leaves
+    * one file for an empty write); the table's rows are unchanged.
     */
   def appendNew(incoming: DataFrame, path: String, keys: Seq[String]): Long = {
     val spark = incoming.sparkSession
@@ -105,13 +113,10 @@ object Sinks {
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema)
       }
-    // persist so the anti-join is computed once for both count and write
-    val fresh = Dedup.newRowsLarge(incoming, existing, keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0) fresh.write.mode("append").parquet(path)
-      n
-    } finally fresh.unpersist()
+    val appended = Observation()
+    Dedup.newRowsLarge(incoming, existing, keys)
+      .observe(appended, count(lit(1)).as("n"))
+      .write.mode("append").parquet(path)
+    appended.get("n").asInstanceOf[Long]
   }
 }

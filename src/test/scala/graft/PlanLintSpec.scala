@@ -1,6 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Plan traversal that descends through AQE wrappers, query stages and
+  * subqueries. */
+private object PlanWalk extends AdaptiveSparkPlanHelper
 
 /** Automated no-scale-killer sweep: every batch query's PHYSICAL plan
   * is linted, not eyeballed.
@@ -61,13 +69,13 @@ class PlanLintSpec extends AnyFunSuite with SharedSession {
     "TakeOrderedAndProject")
 
   private lazy val plansAndGuards
-      : Seq[(String, String, Seq[graft.operators.Guards.Decision])] = {
+      : Seq[(String, SparkPlan, Seq[graft.operators.Guards.Decision])] = {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(_._1.startsWith("q_stream_"))
       .map { case (name, fn) =>
         graft.operators.Guards.clear()
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = fn(spark, sfDir).queryExecution.executedPlan
         (name, plan,
           graft.operators.Guards.drain()
             .sortBy(d => (d.site, d.n, d.decision)))
@@ -75,7 +83,7 @@ class PlanLintSpec extends AnyFunSuite with SharedSession {
   }
 
   private lazy val plans: Seq[(String, String)] =
-    plansAndGuards.map(t => (t._1, t._2))
+    plansAndGuards.map(t => (t._1, t._2.toString))
 
   /** Counts tracked operator tokens in the plan TREE STRING — the one
     * rendering that descends through AQE wrappers, reused subtrees and
@@ -189,5 +197,34 @@ class PlanLintSpec extends AnyFunSuite with SharedSession {
            |regenerate with SPARK_GRAFT_REGEN_FINGERPRINTS=1
            |sbt 'testOnly graft.PlanLintSpec'""".stripMargin)
     }
+  }
+
+  /** Lint 4 — no quadratic window frame: Spark evaluates a ROWS or
+    * RANGE frame that ends at UNBOUNDED FOLLOWING but starts anywhere
+    * except UNBOUNDED PRECEDING by re-aggregating the rest of the
+    * partition for every row, O(n²) per window partition. "First
+    * non-null at or after" is a running `last` over the mirrored order
+    * (`Fill.bfill`). Walks every batch query's physical plan — through
+    * AQE wrappers and subqueries — plus `transformBars`, the bar
+    * pipeline the daily load runs outside the query set.
+    */
+  test("no window frame runs from a bounded start to UNBOUNDED FOLLOWING") {
+    import spark.implicits._
+    val bars = Seq(("A", "2024-03-10 09:30:00", "1.5", null, "7"),
+        ("A", "2024-03-10 09:31:00", null, "2.5", null))
+      .toDF("symbol", "timestamp", "open", "close", "volume")
+    val walked = plansAndGuards.map(t => (t._1, t._2)) :+
+      ("transformBars" -> graft.operators.Transforms.transformBars(bars)
+        .queryExecution.executedPlan)
+    val offenders = walked.flatMap { case (name, plan) =>
+      PlanWalk.collectWithSubqueries(plan) { case w: WindowExec => w }
+        .flatMap(_.windowExpression.flatMap(_.collect {
+          case SpecifiedWindowFrame(_, lower, UnboundedFollowing)
+              if lower != UnboundedPreceding => s"$name: ${lower.sql}"
+        }))
+    }
+    assert(offenders.isEmpty,
+      s"frames ending at UNBOUNDED FOLLOWING from a bounded start:\n  " +
+        offenders.distinct.mkString("\n  "))
   }
 }

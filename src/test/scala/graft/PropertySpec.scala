@@ -38,14 +38,22 @@ class PropertySpec extends AnyFunSuite with SharedSession {
   }
 
   test("property: after ffill+bfill, a row is null iff its whole group is null") {
-    val df = randomRows(800).toDF("k", "ord", "v")
-    val filled = df.withColumn("f",
-      Fill.ffillBfill(Seq(col("k")), Seq(col("ord")))(col("v")))
-    val groupsAllNull = df.groupBy("k")
-      .agg((count(col("v")) === 0).as("all_null"))
-    val bad = filled.join(groupsAllNull, "k")
-      .filter(col("f").isNull =!= col("all_null")).count()
-    assert(bad === 0)
+    // `ord` unique, and `ord` tied: many small groups over two order
+    // values, so most rows have a tied peer and many groups' only value
+    // sits in a tie group
+    val r = new scala.util.Random(7)
+    val tied = (1 to 800).map(_ => (r.nextInt(200).toLong, r.nextInt(2).toLong,
+      if (r.nextInt(4) == 0) Some(r.nextDouble()) else None))
+    for (rows <- Seq(randomRows(800), tied); o <- Seq(col("ord"), col("ord").desc)) {
+      val df = rows.toDF("k", "ord", "v")
+      val filled = df.withColumn("f",
+        Fill.ffillBfill(Seq(col("k")), Seq(o))(col("v")))
+      val groupsAllNull = df.groupBy("k")
+        .agg((count(col("v")) === 0).as("all_null"))
+      val bad = filled.join(groupsAllNull, "k")
+        .filter(col("f").isNull =!= col("all_null")).count()
+      assert(bad === 0, s"order $o")
+    }
   }
 
   test("property: cleanTextForNlp output alphabet is [\\w\\s.!?] only") {

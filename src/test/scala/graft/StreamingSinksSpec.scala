@@ -423,6 +423,30 @@ class StreamingSinksSpec extends AnyFunSuite with SharedSession {
     assert(spark.read.parquet(dir).count() === 3)
   }
 
+  test("appendNew throws when a key column is absent from the table") {
+    val dir = Files.createTempDirectory("graft_append_key").toString + "/t"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
+    // an explicit-schema read of the table would return NULL for the
+    // missing `src`, match no key and re-append every incoming row
+    val batch = Seq((1L, "x", "a"), (2L, "y", "b")).toDF("id", "src", "v")
+    intercept[Exception] { Sinks.appendNew(batch, dir, Seq("id", "src")) }
+    assert(spark.read.parquet(dir).count() === 1)
+  }
+
+  test("a no-op appendNew reload appends 0 rows and adds only zero-row files") {
+    val dir = Files.createTempDirectory("graft_append_noop").toString + "/t"
+    val batch = (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3)
+    assert(Sinks.appendNew(batch, dir, Seq("id")) === 50L)
+    def dataFiles = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
+    val before = dataFiles
+    assert(Sinks.appendNew(batch, dir, Seq("id")) === 0L)
+    assert(spark.read.parquet(dir).count() === 50L)
+    (dataFiles -- before).foreach { f =>
+      assert(spark.read.parquet(f).count() === 0L, s"$f holds rows")
+    }
+  }
+
   test("BucketedTable: a commit leaves untouched buckets' files byte-identical") {
     import graft.streaming.BucketedTable
     def md5(p: java.nio.file.Path): String =

@@ -236,6 +236,88 @@ class TransformsSpec extends AnyFunSuite with SharedSession {
       Some(7.0), Some(7.0), Some(7.0)))               // g3 edge fills
   }
 
+  test("ffillBfill and interpolateLinear are bit-identical to the unbounded-following frame form") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    // the frame formulas the running-window form replaced, inlined
+    def w(p: Seq[Column], o: Seq[Column]) = Window.partitionBy(p: _*).orderBy(o: _*)
+    def prev(p: Seq[Column], o: Seq[Column])(c: Column) = last(c, ignoreNulls = true)
+      .over(w(p, o).rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    def next(p: Seq[Column], o: Seq[Column])(c: Column) = first(c, ignoreNulls = true)
+      .over(w(p, o).rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    def oldInterp(p: Seq[Column], o: Seq[Column])(v: Column, t: Column) = {
+      val (pv, pt) = (prev(p, o)(v), prev(p, o)(when(v.isNotNull, t)))
+      val (nv, nt) = (next(p, o)(v), next(p, o)(when(v.isNotNull, t)))
+      when(v.isNotNull, v).when(pv.isNull, nv).when(nv.isNull, pv)
+        .when(nt === pt, pv)
+        .otherwise(pv + (nv - pv) * ((t - pt).cast("double") / (nt - pt).cast("double")))
+    }
+    // groups of 0..40 rows; each group draws its own null pattern:
+    // leading, middle and trailing runs, all-null, or none
+    val rnd = new scala.util.Random(20240310L)
+    val rows = (0 until 60).flatMap { g =>
+      val n = rnd.nextInt(41)
+      val pattern = g % 5
+      val ts = rnd.shuffle((0 until n).map(i => i * 1000L + rnd.nextInt(900))).toIndexedSeq
+      (0 until n).map { i =>
+        val isNull = pattern match {
+          case 0 => i < n / 3                                // leading run
+          case 1 => i >= n / 3 && i < 2 * n / 3              // middle run
+          case 2 => i >= 2 * n / 3                           // trailing run
+          case 3 => true                                     // all null
+          case _ => rnd.nextInt(3) == 0                      // scattered
+        }
+        val v = rnd.nextInt(20) match {
+          case 0 => -0.0
+          case 1 => Double.NaN
+          case k => rnd.nextGaussian() * math.pow(10, k % 7 - 3)
+        }
+        // `a` repeats and has nulls, so the two-key orders exercise
+        // every direction and null placement; (a, t) stays total
+        val a = if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(3))
+        (s"g$g", ts(i), a, if (isNull) None else Some(v))
+      }
+    }
+    val df = rows.toDF("k", "t", "a", "v")
+    val orders = Seq(
+      Seq($"t"),
+      Seq($"t".desc),
+      Seq($"a", $"t"),
+      Seq($"a".asc_nulls_last, $"t".desc),
+      Seq($"a".desc, $"t".desc_nulls_first),
+      Seq($"a".desc_nulls_first, $"t".asc_nulls_last))
+    def bits(x: Any): Option[Long] =
+      Option(x).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+    orders.foreach { o =>
+      val p = Seq($"k")
+      val got = df.select($"k", $"t",
+          Fill.ffillBfill(p, o)($"v").as("fb"),
+          coalesce(prev(p, o)($"v"), next(p, o)($"v")).as("fb_old"),
+          Fill.interpolateLinear(p, o)($"v", $"t").as("ip"),
+          oldInterp(p, o)($"v", $"t").as("ip_old"))
+        .collect()
+      assert(got.length === rows.length)
+      val diffs = got.filter(r =>
+        bits(r.get(2)) != bits(r.get(3)) || bits(r.get(4)) != bits(r.get(5)))
+      assert(diffs.isEmpty, s"order ${o.mkString(", ")}: ${diffs.take(3).mkString("; ")}")
+    }
+  }
+
+  test("ffillBfill and interpolateLinear fill a null from a tied peer placed after it") {
+    // one timestamp, the null row first in input order: the sort keeps
+    // tied rows in input order in both the order and the mirrored order,
+    // so only a frame that takes in the whole tie group sees the 5
+    val df = Seq(("g", 1L, Option.empty[Double]), ("g", 1L, Some(5.0)))
+      .toDF("k", "t", "v").coalesce(1)
+    Seq(Seq($"t"), Seq($"t".desc)).foreach { o =>
+      val got = df.select(
+          Fill.ffillBfill(Seq($"k"), o)($"v"),
+          Fill.interpolateLinear(Seq($"k"), o)($"v", $"t"))
+        .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+      assert(got === Seq.fill(2)((Some(5.0), Some(5.0))), s"order ${o.mkString(", ")}")
+    }
+  }
+
   // --- pipelines: totality ---------------------------------------------
 
   test("transformNews: empty input yields empty output, not an error") {

@@ -124,7 +124,15 @@ def compare():
 if __name__ == "__main__":
     # pid-scoped dump: clean on EVERY exit path (a failed run would
     # otherwise leak a uniquely-named multi-hundred-MB dir per attempt)
-    import atexit
+    # — including a stop by signal: SIGTERM (e.g. from `timeout`) would
+    # end the process without running atexit hooks, so SIGTERM and
+    # SIGINT become SystemExit, which unwinds (stopping a running
+    # Verify child) and then runs the hook
+    import atexit, signal
     atexit.register(lambda: subprocess.run(["rm", "-rf", OUT]))
+    def stop(signum, _frame):
+        raise SystemExit(128 + signum)
+    for s in (signal.SIGTERM, signal.SIGINT):
+        signal.signal(s, stop)
     run_verify()
     sys.exit(1 if compare() else 0)
