@@ -32,7 +32,13 @@ object Session {
     * serialized writer cut CPU 53% on the worst batch family, and
     * keeping the bypass path for streams took the stream family from
     * 63.4 to 56.5 s, with identical results (docs/r15/,
-    * OPTIMIZATION_r15 §1). */
+    * OPTIMIZATION_r15 §1).
+    *
+    * Generated whole-stage classes are all named `GeneratedIterator`,
+    * not `GeneratedIteratorForCodegenStageN`: N is a stage id that AQE
+    * assigns in an order that depends on timing, and the codegen cache
+    * keys on the source text, so with the id in the name a warm query
+    * recompiles classes that differ only in N. */
   def builder(cpus: Int = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -44,4 +50,5 @@ object Session {
       .config("spark.shuffle.sort.bypassMergeThreshold",
         StreamShufflePartitions.toLong)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 }

@@ -1,10 +1,20 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  *
+  * Usage: `graft.Verify sfDir outDir [query ...]` — with query names,
+  * only those queries run (an unknown name fails before any runs). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: graft.Verify sfDir outDir [query ...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val all = SparkEntry.queries
+    val only = args.drop(2).toSet
+    val unknown = only -- all.keySet
+    require(unknown.isEmpty,
+      s"graft.Verify: no such query: ${unknown.toSeq.sorted.mkString(", ")}")
+    val selected = if (only.isEmpty) all else all.filter { case (n, _) => only(n) }
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -32,7 +42,7 @@ object Verify {
           org.apache.spark.graft.Storage.removeShuffle(sc, id, blocking = false))
       System.gc()
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       def attempt(): Unit = {
         val df = fn(spark, sfDir)
         // Tripwire: the driver's oracle compare sorts rows with pandas,

@@ -2,12 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cols
 
 /** Scalar text/column helpers (SURVEY.md §2.3).
   *
-  * All pure `Column => Column` combinators over Spark built-ins — no UDFs,
-  * so every function stays inside whole-stage codegen and Catalyst can
-  * push/reorder around them.
+  * All pure `Column => Column` combinators over Spark built-ins and the
+  * engine's native [[CleanText]] expression — no UDFs, so every function
+  * stays inside whole-stage codegen and Catalyst can push/reorder
+  * around them.
   *
   * Reference semantics: /root/reference/data_pipeline/tasks/transformation.py
   */
@@ -17,18 +19,13 @@ object Text {
     *
     * null→""; lowercase; strip HTML tags; strip URLs; strip `[+N chars]`
     * truncation markers; strip everything outside `[\w\s.!?]`; collapse
-    * whitespace; trim. Regex classes are ASCII (`\w`/`\s` in Java default
-    * mode) which matches the DuckDB RE2 oracle dialect.
+    * whitespace; trim. The five regex steps run as one native
+    * expression, [[CleanText]], byte-identical to the Java-regex chain
+    * (default-mode ASCII `\w`/`\s`); the DuckDB oracle keeps that chain
+    * in RE2, whose `\s` differs from Java's only on `\x0B`.
     */
-  def cleanTextForNlp(c: Column): Column = {
-    val lowered   = lower(coalesce(c, lit("")))
-    val noTags    = regexp_replace(lowered, "<[^>]+>", "")
-    val noUrls    = regexp_replace(noTags, "http\\S+|www\\S+|https\\S+", "")
-    val noTrunc   = regexp_replace(noUrls, "\\[\\+\\d+ chars\\]", "")
-    val alnumOnly = regexp_replace(noTrunc, "[^\\w\\s.!?]", "")
-    val collapsed = regexp_replace(alnumOnly, "\\s+", " ")
-    trim(collapsed)
-  }
+  def cleanTextForNlp(c: Column): Column =
+    Cols.of(CleanText(Cols.exprOf(lower(coalesce(c, lit(""))))))
 
   /** F3 — content coalesce chain (transformation.py:268). */
   def coalesceContent(content: Column, description: Column, title: Column): Column =

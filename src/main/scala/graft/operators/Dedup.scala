@@ -43,9 +43,12 @@ object Dedup {
 
   /** Same as [[newRows]] but without the broadcast hint, for when the
     * existing side is large (let Catalyst/AQE choose the join strategy).
+    * The key side is not de-duplicated: a left-anti join's result does
+    * not depend on how often a key repeats on the right, and a `distinct`
+    * there costs an aggregate stage per append.
     */
   def newRowsLarge(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** K2 — idempotent append: the final table state after loading `incoming`
     * into `existing` with insert-only-if-new semantics

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
@@ -226,5 +226,40 @@ class PlanLintSpec extends AnyFunSuite with SharedSession {
     assert(offenders.isEmpty,
       s"frames ending at UNBOUNDED FOLLOWING from a bounded start:\n  " +
         offenders.distinct.mkString("\n  "))
+  }
+
+  /** Lint 5 — the daily load cleans text with one native expression
+    * (`CleanText`), not a chain of regex passes: no `regexp_replace` may
+    * reappear in the plans of the queries that clean text or of the two
+    * transforms the daily load runs. */
+  test("text cleaning plans carry no RegExpReplace") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, regexp_replace}
+    // repartition keeps the optimizer from folding projections over the
+    // local rows into a LocalTableScan, which would hide any expression
+    val news = Seq(("u1", "<b>T</b>", "body http://x", "d", "2024-01-01 00:00:00", "a"))
+      .toDF("url", "title", "content", "description", "publishedAt", "author")
+      .repartition(1)
+    val posts = Seq(("r1", "s", "t", "b", 1L, 1L, true, "p1", 1.7e9, "2024-01-01 00:00:00"))
+      .toDF("reddit_id", "subreddit", "title", "selftext", "score",
+        "num_comments", "is_text_post", "permalink", "published_at",
+        "article_published_at")
+      .repartition(1)
+    val queries = Set("q_clean_text", "q_pipeline_news", "q_pipeline_posts")
+    val walked = plansAndGuards.collect {
+      case (name, plan, _) if queries(name) => (name, plan)
+    } ++ Seq(
+      "transformNews" -> graft.operators.Transforms.transformNews(news, col("url")),
+      "transformPosts" -> graft.operators.Transforms.transformPosts(posts, col("reddit_id"))
+    ).map { case (n, df) => (n, df.queryExecution.executedPlan) }
+    assert(walked.map(_._1).toSet === queries ++ Set("transformNews", "transformPosts"))
+    def hasRegex(plan: SparkPlan): Boolean =
+      PlanWalk.collectWithSubqueries(plan) { case p => p }
+        .exists(_.expressions.exists(_.exists(_.isInstanceOf[RegExpReplace])))
+    // the walk must see a regexp_replace where there is one
+    assert(hasRegex(news.select(regexp_replace(col("title"), "<", ""))
+      .queryExecution.executedPlan))
+    val offenders = walked.filter { case (_, plan) => hasRegex(plan) }.map(_._1)
+    assert(offenders.isEmpty, s"RegExpReplace in: ${offenders.mkString(", ")}")
   }
 }

@@ -75,15 +75,76 @@ class TransformsSpec extends AnyFunSuite with SharedSession {
     assert(got(2) === ((640, 224, 168, true)))   // 480·224/640 = 168
   }
 
+  /** The regex chain `cleanTextForNlp` ran before it became one native
+    * expression — the reference the native cleaner must equal byte for
+    * byte (Java default-mode regex: ASCII `\w`, `\s`, `\d`). */
+  private def regexClean(c: org.apache.spark.sql.Column) = {
+    val lowered   = lower(coalesce(c, lit("")))
+    val noTags    = regexp_replace(lowered, "<[^>]+>", "")
+    val noUrls    = regexp_replace(noTags, "http\\S+|www\\S+|https\\S+", "")
+    val noTrunc   = regexp_replace(noUrls, "\\[\\+\\d+ chars\\]", "")
+    val alnumOnly = regexp_replace(noTrunc, "[^\\w\\s.!?]", "")
+    trim(regexp_replace(alnumOnly, "\\s+", " "))
+  }
+
   test("cleanTextForNlp strips tags, urls, truncation markers, junk") {
     val df = Seq(
       ("<b>Hello</b> WORLD http://x.co/a?b=1 rest", "hello world rest"),
       ("Truncated story [+1234 chars]", "truncated story"),
       ("keep.words! and?  spaces,;#", "keep.words! and? spaces"),
+      // each step works on the previous step's output: a tag strip can
+      // expose a URL or a truncation marker, a URL strip a marker;
+      // \d is ASCII only, U+0085 and U+00A0 are not \s
+      ("ht<b>tp://x", ""),
+      ("ww<i>w.x.com y", "y"),
+      ("a[+1<b> chars]", "a"),
+      ("[+1http:x chars]z", "z"),
+      ("[+12 CHARS] kept", "kept"),
+      ("[+\u0661\u0662 chars]", "chars"),
+      ("a <> b", "a b"),
+      ("unclosed <tag here", "unclosed tag here"),
+      ("end http", "end http"),
+      ("x\u000By\fz", "x y z"),
+      ("x\u0085y\u00A0z", "xyz"),
+      ("", ""),
       (null.asInstanceOf[String], "")
     ).toDF("in", "want")
-    val got = df.select(Text.cleanTextForNlp($"in").as("got"), $"want").collect()
-    got.foreach(r => assert(r.getString(0) === r.getString(1)))
+    val got = df.select($"in", Text.cleanTextForNlp($"in").as("got"),
+      regexClean($"in").as("ref"), $"want").collect()
+    got.foreach { r =>
+      assert(r.getString(1) === r.getString(3), s"input ${r.getString(0)}")
+      assert(r.getString(2) === r.getString(3), s"reference, input ${r.getString(0)}")
+    }
+  }
+
+  test("cleanTextForNlp equals the regex chain on 120k adversarial strings") {
+    // pieces that sit on each step's edges: tags (closed, unclosed,
+    // empty, nested), URL heads before every whitespace kind and at the
+    // end, truncation-marker near-misses, a non-ASCII digit, the six
+    // Java \s chars and two Unicode spaces Java's \s excludes (U+0085,
+    // U+00A0), case-mapping specials (é, İ, the Kelvin sign), an emoji
+    // and a lone surrogate
+    val alphabet = Array(
+      "<", ">", "<>", "<b>", "</p>", "<<a>", "<a href=x>", "< >",
+      "http", "HTTP", "https", "www", "WWW", "w", "ht", "tp", "://", "x.co/a?b=1",
+      "[", "]", "+", "[+", "[+12 chars]", "[+0 chars]", "[+ chars]", "[+12 chars",
+      "[+12 CHARS]", " chars]", "12", "\u0661",
+      " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\u0085", "\u00A0",
+      "\u00E9", "\u0130", "\u212A", "\uD83D\uDE00", "\uD800",
+      "a", "Z", "_", "0", "9", ".", "!", "?", ",", "#", "-", "chars", "word")
+    val r = new scala.util.Random(20261019)
+    val texts = (0 until 120000).map { i =>
+      val s = if (r.nextInt(50) == 0) null
+        else Seq.fill(r.nextInt(15))(alphabet(r.nextInt(alphabet.length))).mkString
+      (i, s)
+    }
+    val df = texts.toDF("i", "t")
+      .select($"i", $"t", Text.cleanTextForNlp($"t").as("got"),
+        regexClean($"t").as("ref"))
+    val bad = df.filter(!($"got" <=> $"ref"))
+    val nBad = bad.count()
+    assert(nBad === 0, bad.limit(5).collect().map(r =>
+      s"\n  in=${r.get(1)} got=${r.get(2)} ref=${r.get(3)}").mkString)
   }
 
   // --- D1/D2 keep-first dedup ------------------------------------------

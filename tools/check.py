@@ -4,8 +4,12 @@ then compare each query's parquet output against the DuckDB oracle
 (columns sorted by name, rows sorted, exact value compare).
 
 Usage: python3 tools/check.py [sf_dir] [only_query ...]
+
+With query names, Verify runs only those queries and only they are
+compared. The wall time of the Verify run and of the whole check is
+printed at the end.
 """
-import json, math, subprocess, sys, os, glob
+import json, math, subprocess, sys, os, glob, time
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ONLY = set(sys.argv[2:])
@@ -33,9 +37,9 @@ def run_verify():
         "-cp", os.environ.get("SPARK_GRAFT_CLASSES",
                               f"{REPO}/target/scala-2.13/classes")
                + ":/opt/spark/jars/*",
-        "graft.Verify", SF, OUT]
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    r = subprocess.run(cmd, env=env, capture_output=True, text=True)
+        "graft.Verify", SF, OUT] + sorted(ONLY)
+    # slots: SPARK_GRAFT_CPUS if set, else the host's cores (graft.Session)
+    r = subprocess.run(cmd, capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
             print(line)
@@ -134,5 +138,10 @@ if __name__ == "__main__":
         raise SystemExit(128 + signum)
     for s in (signal.SIGTERM, signal.SIGINT):
         signal.signal(s, stop)
+    t0 = time.monotonic()
     run_verify()
-    sys.exit(1 if compare() else 0)
+    t1 = time.monotonic()
+    n_bad = compare()
+    print(f"== wall: verify {t1 - t0:.0f} s, "
+          f"total {time.monotonic() - t0:.0f} s ==")
+    sys.exit(1 if n_bad else 0)
