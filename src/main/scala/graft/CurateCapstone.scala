@@ -2,15 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-15 verdict #7 measurement rig — the end-to-end 10× capstone:
-  * the FULL curation assembly line (the exact `q_pipeline_curate`
-  * fixture) plus the two stored-index builds it and the ANN family
-  * depend on, timed in ONE JVM at the SF dir the env names, with a
-  * per-stage CPU breakdown of the curate query's timed runs (the same
-  * stage listener channel graft.Bench commits). Run it at sf0.1 and
-  * sf1 back-to-back and the per-phase ratios ARE the 10× exponents.
+import graft.Harness.r3
+
+/** The end-to-end curation capstone: the full curation assembly line
+  * (the exact `q_pipeline_curate` fixture) plus the two stored-index
+  * builds it and the ANN family depend on, timed in ONE JVM at
+  * `SPARK_GRAFT_SF_DIR`, with a per-stage CPU breakdown of the curate
+  * query's timed runs (the stage records graft.Bench writes). Run it at
+  * sf0.1 and sf1 back-to-back and the per-phase ratios ARE the 10×
+  * exponents.
   *
-  * Phases (each `SPARK_GRAFT_AB_RUNS` timed runs, median):
+  * Phases (each [[Harness.Runs]] timed runs, median; every run is
+  * followed by the full [[Harness.sweep]] of cached frames, checkpoint
+  * blocks, broadcasts and shuffles, so no phase inherits another's):
   *  - build_neardup: [[graft.operators.NearDup.writeNearDupIndex]] of
   *    the curate corpus (docs ∪ exact copies ∪ truncated twins, the
   *    q_pipeline_curate fixture) into a FRESH scratch path per run —
@@ -22,73 +26,27 @@ import org.apache.spark.sql.functions._
   *    (the shared probe index exists after the warm-up, as in the
   *    bench, so this prices the PIPELINE, not the one-time build).
   *
-  * The pivot (q_star_join, min-of-2) runs before and after so the
-  * capture carries its own epoch context. Prints one JSON line.
+  * The pivot ([[Harness.pivot]]) runs before and after so the capture
+  * carries its own epoch context. Prints one JSON line.
   */
 object CurateCapstone {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_AB_RUNS", "3").toInt
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // per-stage CPU attribution for the curate query's timed runs —
-    // the graft.Bench stage channel, duplicated here because the rig
-    // times non-query phases the bench cannot
-    final case class StageRec(name: String, cpuMs: Long, runMs: Long,
-      tasks: Int)
-    val stageBuf = new java.util.concurrent.ConcurrentLinkedQueue[StageRec]()
-    @volatile var capture = false
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          if (capture) {
-            val si = e.stageInfo
-            val tm = si.taskMetrics
-            if (tm != null) {
-              stageBuf.add(StageRec(si.name.takeWhile(_ != '\n').take(120),
-                tm.executorCpuTime / 1000000L, tm.executorRunTime,
-                si.numTasks))
-              ()
-            }
-          }
-      })
+    val bcBaseline = graft.operators.Eager.broadcastSnapshot(spark)
+    val recorder = new Harness.Recorder(spark)
 
     def table(n: String) = graft.sources.Sources.table(spark, sfDir, n)
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    def median(f: () => Unit): Double = {
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        f()
-        sweep()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.length / 2)
-    }
-    def pivot(): Double = {
-      val fn = SparkEntry.queries("q_star_join")
-      (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        sweep()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-    def r3(d: Double): Double = math.rint(d * 1000) / 1000
+    def sweep(): Unit = Harness.sweep(spark, bcBaseline)
+    def median(f: () => Unit): Double =
+      Harness.median((1 to Harness.Runs).map(_ => Harness.seconds { f(); sweep() }))
+    def pivot(): Double = Harness.pivot(spark, sfDir, bcBaseline)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_capstone")
-      .toString
     def fresh(tag: String): String = {
-      val p = new java.io.File(scratch, tag)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p)
+      val p = scratch.resolve(tag)
+      graft.operators.IndexStore.deleteRec(p.toFile)
       p.toString
     }
 
@@ -126,26 +84,16 @@ object CurateCapstone {
       graft.operators.Similarity.writeIvfIndex(emb, "vec_id", "embedding",
         nCentroids = 16, path = fresh(s"ivf_$i"))
     }
-    stageBuf.clear(); capture = true
-    val curate = median(() => { curateFn(spark, sfDir).count(); () })
-    capture = false
-    val recs = Iterator.continually(stageBuf.poll())
-      .takeWhile(_ != null).toSeq
-    val topStages = recs.groupBy(_.name).map { case (n, rs) =>
-      StageRec(n, rs.map(_.cpuMs).sum, rs.map(_.runMs).sum,
-        rs.map(_.tasks).sum)
-    }.toSeq.sortBy(-_.cpuMs).take(12)
+    val (curate, topStages) = recorder.stages(12)(
+      median(() => { curateFn(spark, sfDir).count(); () }))
     val pivot1 = pivot()
 
-    def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val stagesJson = topStages.map(r =>
-      s"""{"stage":"${esc(r.name)}","cpu_ms":${r.cpuMs},""" +
-        s""""run_ms":${r.runMs},"tasks":${r.tasks}}""").mkString("[", ",", "]")
-    println(s"""{"capstone":"curate","sf":"$sfDir","runs":$runs,""" +
-      s""""pivot_before":${r3(pivot0)},"pivot_after":${r3(pivot1)},""" +
-      s""""build_neardup":${r3(buildNd)},"build_ivf":${r3(buildIvf)},""" +
-      s""""curate_query":${r3(curate)},"curate_stages":$stagesJson}""")
+    println(Harness.json(Harness.obj("capstone" -> "curate", "sf" -> sfDir,
+      "runs" -> Harness.Runs, "pivot_before" -> r3(pivot0),
+      "pivot_after" -> r3(pivot1), "build_neardup" -> r3(buildNd),
+      "build_ivf" -> r3(buildIvf), "curate_query" -> r3(curate),
+      "curate_stages" -> topStages.map(r => Harness.obj("stage" -> r.stage,
+        "cpu_ms" -> r.cpuMs, "run_ms" -> r.runMs, "tasks" -> r.tasks)))))
     spark.stop()
   }
 }

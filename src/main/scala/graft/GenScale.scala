@@ -64,14 +64,10 @@ object GenScale {
             f.getName.endsWith(".parquet"))
           .getOrElse(sys.error(s"no part file written for $name"))
         val dst = new java.io.File(s"$outDir/$name.parquet")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        if (dst.exists()) rm(dst)
+        graft.operators.IndexStore.deleteRec(dst)
         java.nio.file.Files.move(part.toPath, dst.toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        rm(tmpDir)
+        graft.operators.IndexStore.deleteRec(tmpDir)
         System.err.println(s"[gen] $name done")
       }
     def ids(n: Long, parts: Int = 32): DataFrame =

@@ -624,6 +624,17 @@ object OracleSql {
        |  ORDER BY cos DESC, neighbor_id) AS rnk FROM scored)
        |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
 
+  /** `ctes` with every top-level CTE (a `name AS (` line at column 0)
+    * marked `AS MATERIALIZED`. DuckDB otherwise inlines a CTE at each
+    * reference, so a chain that reads one CTE from several places
+    * recomputes it (and everything below it) once per reference: the
+    * k-NN, embedding near-dup and label-propagation oracles re-ran their
+    * 64-dim decimal dot products per reference and did not finish in
+    * 40 min; materialized each takes 1–1.5 min at sf0.01 on 4 cores.
+    * Same rows either way. */
+  private def materialized(ctes: String): String =
+    ctes.replaceAll("(?m)^(\\w+) AS \\(", "$1 AS MATERIALIZED (")
+
   /** k-NN-graph CTE chain (occupancy-ADAPTIVE-width × 4-table seeded
     * sign buckets → exact decimal cosine on the UNIONed candidate
     * pairs → per-query rank) — shared by q_knn_graph and q_label_prop.
@@ -637,7 +648,7 @@ object OracleSql {
     * table-major-interleaved plane blocks ([[wideBucketSql]], stride
     * 16). Yields CTEs pbn/pbc/pbs/params, n, cand, p, sc, r (r
     * carries cos + rnk). */
-  private def knnGraphCtes: String = {
+  private def knnGraphCtes: String = materialized {
     val buckets = (0 until 4)
       .map(t => s"${wideBucketSql(t, 4, 64, "embedding")} AS b$t")
       .mkString(",\n    ")
@@ -681,7 +692,7 @@ object OracleSql {
     * [8, 32] with measured Σc² ≤ 32·n over the ∪-corpus
     * ([[pairBudgetParamsCtes]]), each table's bucket the nb-prefix of
     * its interleaved plane blocks ([[wideBucketSql]], nTables = 2). */
-  private def embedNearDupCtes: String =
+  private def embedNearDupCtes: String = materialized {
     s"""pert AS (
        |  SELECT vec_id + 100000 AS vec_id,
        |    list_transform(generate_series(1, len(embedding)),
@@ -720,15 +731,18 @@ object OracleSql {
        |  WHERE CAST(dot AS DOUBLE) /
        |      (sqrt(CAST(n2a AS DOUBLE)) * sqrt(CAST(n2b AS DOUBLE))) >= 0.999)"""
       .stripMargin
+  }
 
-  /** The clean_text_for_nlp chain (F1) in DuckDB RE2 dialect. */
+  /** The clean_text_for_nlp chain (F1) in DuckDB RE2 dialect. RE2's `\s`
+    * lacks the vertical tab that Java's (and the engine's) includes, so
+    * whitespace is spelled `[\s\v]`. */
   private def cleanExpr(c: String): String =
     "trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
       s"regexp_replace(lower(coalesce($c, '')), '<[^>]+>', '', 'g'), " +
-      "'http\\S+|www\\S+|https\\S+', '', 'g'), " +
+      "'http[^\\s\\v]+|www[^\\s\\v]+|https[^\\s\\v]+', '', 'g'), " +
       "'\\[\\+\\d+ chars\\]', '', 'g'), " +
-      "'[^\\w\\s.!?]', '', 'g'), " +
-      "'\\s+', ' ', 'g'))"
+      "'[^\\w\\s\\v.!?]', '', 'g'), " +
+      "'[\\s\\v]+', ' ', 'g'))"
 
   /** Shared MinHash-LSH CTE chain (corpus → word-shingle digests →
     * signatures → bands → candidate pairs → exact jaccard) — reused by
@@ -1887,16 +1901,17 @@ object OracleSql {
            |  LEFT JOIN l0 s ON s.node = w.node WHERE s.node IS NULL)"""
           .stripMargin
       }.mkString(",\n")
+      val graph =
+        """kg AS (
+          |  SELECT query_id, neighbor_id FROM r WHERE rnk <= 3),
+          |edges AS (
+          |  SELECT query_id AS src, neighbor_id AS dst FROM kg
+          |  UNION SELECT neighbor_id, query_id FROM kg),
+          |l0 AS (
+          |  SELECT DISTINCT vec_id AS node, label FROM embeddings
+          |  WHERE vec_id < 50)""".stripMargin
       s"""WITH $knnGraphCtes,
-         |kg AS (
-         |  SELECT query_id, neighbor_id FROM r WHERE rnk <= 3),
-         |edges AS (
-         |  SELECT query_id AS src, neighbor_id AS dst FROM kg
-         |  UNION SELECT neighbor_id, query_id FROM kg),
-         |l0 AS (
-         |  SELECT DISTINCT vec_id AS node, label FROM embeddings
-         |  WHERE vec_id < 50),
-         |$rounds
+         |${materialized(s"$graph,\n$rounds")}
          |SELECT node, label FROM l3 ORDER BY node""".stripMargin
     },
 
@@ -2178,23 +2193,23 @@ object OracleSql {
       // per-memory stripMargin trap: rounds are stripped individually,
       // then joined with plain interpolation (no outer stripMargin)
       // every r$i is referenced TWICE per round (mass join + dangling
-      // sum) — without MATERIALIZED, CTE inlining doubles the plan per
-      // round (2^18 expansion; observed as DuckDB fd exhaustion)
+      // sum) — inlined, the plan doubles per round (2^18 expansion;
+      // observed as DuckDB fd exhaustion)
       val head =
-        """WITH edges AS MATERIALIZED (
+        """edges AS (
           |  SELECT DISTINCT 'c:' || c_custkey AS src,
           |    'n:' || c_nationkey AS dst
           |  FROM customer),
-          |deg AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
-          |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
+          |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
+          |nodes AS (SELECT DISTINCT node FROM (
           |  SELECT src AS node FROM edges
           |  UNION ALL SELECT dst AS node FROM edges)),
-          |dang AS MATERIALIZED (
+          |dang AS (
           |  SELECT n.node FROM nodes n
           |  LEFT JOIN (SELECT DISTINCT src FROM edges) s ON n.node = s.src
           |  WHERE s.src IS NULL),
-          |nn AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-          |r0 AS MATERIALIZED (SELECT node, 1.0 / CAST(n AS DOUBLE) AS r
+          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+          |r0 AS (SELECT node, 1.0 / CAST(n AS DOUBLE) AS r
           |  FROM nodes CROSS JOIN nn)""".stripMargin
       val rounds = (1 to 18).map { i =>
         s"""m$i AS (
@@ -2207,7 +2222,7 @@ object OracleSql {
            |  SELECT CAST(coalesce(sum(CAST(r.r AS DECIMAL(38,12))),
            |    CAST(0 AS DECIMAL(38,12))) AS DOUBLE) AS dmass
            |  FROM r${i - 1} r JOIN dang g ON r.node = g.node),
-           |r$i AS MATERIALIZED (
+           |r$i AS (
            |  SELECT nodes.node,
            |    (1.0 - 0.25) / CAST(n AS DOUBLE) +
            |      0.25 * (coalesce(m, 0.0) + dmass / CAST(n AS DOUBLE)) AS r
@@ -2216,7 +2231,7 @@ object OracleSql {
       val tail =
         """SELECT node, round(r, 6) AS rank
           |FROM r18 ORDER BY rank DESC, node LIMIT 20""".stripMargin
-      s"$head,\n$rounds\n$tail"
+      s"WITH ${materialized(s"$head,\n$rounds")}\n$tail"
     },
 
     // Converged PERSONALIZED PageRank: full 18-round unroll of the

@@ -31,14 +31,8 @@ object SparkEntry {
   private lazy val scratchBase: java.nio.file.Path = {
     val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_demo_${ProcessHandle.current().pid()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-        finally s.close()
-      }
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.operators.IndexStore.deleteRec(p.toFile)))
     p
   }
 
@@ -50,12 +44,7 @@ object SparkEntry {
     * BucketedTable root would double-apply its commits). */
   private def freshScratchDir(name: String): String = {
     val p = scratchBase.resolve(name)
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally s.close()
-    }
+    graft.operators.IndexStore.deleteRec(p.toFile)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }
@@ -75,10 +64,6 @@ object SparkEntry {
     * `_`/`.`-prefixed) are BYTE-COPIED instead, so even a future
     * non-staged rewrite path cannot reach the pristine inode. */
   private def restoreMutableCopy(pristine: String, scratch: String): Unit = {
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(wipe)
-      f.delete(); ()
-    }
     def linkRec(from: java.io.File, to: java.io.File): Unit = {
       if (from.isDirectory) {
         to.mkdirs()
@@ -93,7 +78,7 @@ object SparkEntry {
       }
     }
     val dirF = new java.io.File(scratch)
-    if (dirF.exists()) wipe(dirF)
+    graft.operators.IndexStore.deleteRec(dirF)
     linkRec(new java.io.File(pristine), dirF)
   }
 

@@ -9,39 +9,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Verify sfDir outDir [query ...]")
     val Array(sfDir, outDir) = args.take(2)
-    val all = SparkEntry.queries
-    val only = args.drop(2).toSet
-    val unknown = only -- all.keySet
-    require(unknown.isEmpty,
-      s"graft.Verify: no such query: ${unknown.toSeq.sorted.mkString(", ")}")
-    val selected = if (only.isEmpty) all else all.filter { case (n, _) => only(n) }
+    val selected = Harness.select(args.toSeq.drop(2))
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // broadcasts resident at session start are infrastructure; everything
     // above this baseline belongs to a completed query (sequential loop)
     val bcBaseline = graft.operators.Eager.broadcastSnapshot(spark)
-    // between-query storage sweep (also the retry reset — see below)
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (terminal results, CC edge lists) are
-      // invisible to clearCache; between queries nothing is
-      // legitimately persisted, so drop every survivor by handle —
-      // deterministic, unlike waiting for a GC to let the
-      // ContextCleaner run (the round-6 bench-inflation root cause)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // ...and broadcast blocks, the round-7 residual: one per
-      // broadcast join, otherwise reclaimed only via GC+ContextCleaner
-      graft.operators.Eager.releaseBroadcastsSince(spark, bcBaseline, force = true)
-      // ...and shuffle state (round 9): map-output files + driver
-      // ShuffleStatus from completed queries, same GC-latency story
-      val sc = spark.sparkContext
-      org.apache.spark.graft.Storage.shuffleIds(sc)
-        .foreach(id =>
-          org.apache.spark.graft.Storage.removeShuffle(sc, id, blocking = false))
-      System.gc()
-    }
     selected.foreach { case (name, fn) =>
       def attempt(): Unit = {
         val df = fn(spark, sfDir)
@@ -80,29 +54,16 @@ object Verify {
       catch { case e1: Throwable =>
         System.err.println(
           s"[verify] $name attempt 1 failed (retrying once): ${e1.getMessage}")
-        sweep()
+        Harness.sweep(spark, bcBaseline)
         try attempt()
         catch { case e2: Throwable =>
           System.err.println(s"[verify] $name failed: ${e2.getMessage}")
         }
       }
-      finally sweep()
+      finally { Harness.sweep(spark, bcBaseline); System.gc() }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Harness.json(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -94,16 +94,14 @@ private[graft] object Eager {
     * terminal has been materialized to a checkpoint (an RDD scan
     * references no broadcast); a destroyed torrent broadcast cannot be
     * re-fetched, so a still-lazy plan would die. No-op when
-    * eagerRelease is off — the lazy plan may still read them — unless
-    * `force` (the Bench/Verify between-queries sweep, where nothing is
-    * referenced by construction regardless of the conf). Assumes the
-    * session runs one query at a time (Bench/Verify/spec discipline);
-    * a concurrent query's in-flight broadcast would be
-    * indistinguishable from ours.
+    * eagerRelease is off — the lazy plan may still read them (the
+    * harness's between-queries [[graft.Harness.sweep]] releases them
+    * regardless). Assumes the session runs one query at a time
+    * (Bench/Verify/spec discipline); a concurrent query's in-flight
+    * broadcast would be indistinguishable from ours.
     */
-  def releaseBroadcastsSince(spark: SparkSession, before: Set[Long],
-      force: Boolean = false): Unit =
-    if (force || enabled(spark)) {
+  def releaseBroadcastsSince(spark: SparkSession, before: Set[Long]): Unit =
+    if (enabled(spark)) {
       val sc = spark.sparkContext
       // blocking: the removal must be VISIBLE when this returns —
       // ReleaseSpec asserts zero residual broadcast blocks right after

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.{AtomicMoveNotSupportedException, Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{AtomicMoveNotSupportedException, Files, LinkOption, StandardCopyOption, StandardOpenOption}
 
 /** Shared machinery for MATERIALIZED on-disk index artifacts (the
   * near-dup band/set index, the IVF posting-list index): build-once
@@ -38,11 +38,16 @@ object IndexStore {
 
   def okAt(dir: File): File = new File(dir, "_OK")
 
-  def deleteRec(f: File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRec)
-    f.delete(); ()
-  }
+  /** Delete `f` and everything under it; a missing path is a no-op.
+    * Symbolic links are removed, never followed. The one recursive
+    * delete of the engine. */
+  private[graft] def deleteRec(f: File): Unit =
+    if (Files.exists(f.toPath, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.walk(f.toPath)
+      try s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { Files.deleteIfExists(p); () })
+      finally s.close()
+    }
 
   /** Recursive byte-copy of a file tree — the shared helper for
     * materializing an artifact out of scratch state (fails on an

@@ -353,11 +353,7 @@ object BucketedTable {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(vdir.getPath, "_buckets"),
       claimed.keys.toSeq.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def wipe(f: java.io.File): Unit = {
-      val fs = f.listFiles(); if (fs != null) fs.foreach(wipe)
-      f.delete(); ()
-    }
-    vs.foreach { case (_, dir) => wipe(dir) }
+    vs.foreach { case (_, dir) => graft.operators.IndexStore.deleteRec(dir) }
   }
 
   /** Seed `root` with a version claiming ALL buckets — the maintainers

@@ -100,21 +100,14 @@ object Streaming {
   private lazy val scratchRoot: java.nio.file.Path = {
     val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_stream_${ProcessHandle.current().pid()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.operators.IndexStore.deleteRec(p.toFile)))
     p
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally s.close()
-    }
-
   private def freshDir(name: String): String = {
     val p = scratchRoot.resolve(name)
-    deleteRecursively(p)
+    graft.operators.IndexStore.deleteRec(p.toFile)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }

@@ -31,8 +31,7 @@ class ReleaseSpec extends AnyFunSuite with SharedSession {
       (op: => DataFrame): Unit = {
     val sc = spark.sparkContext
     // drain anything a previous test left (suites share the session)
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    graft.operators.Eager.releaseBroadcastsSince(spark, Set.empty, force = true)
+    Harness.sweep(spark, Set.empty)
     val before = sc.getPersistentRDDs.keySet
     val bcBefore = graft.operators.Eager.broadcastSnapshot(spark)
     val result = op
@@ -149,7 +148,7 @@ class ReleaseSpec extends AnyFunSuite with SharedSession {
 
   test("broadcast tripwire trips: an unmanaged broadcast join leaves blocks; the sweep clears them") {
     import graft.operators.Eager
-    Eager.releaseBroadcastsSince(spark, Set.empty, force = true)
+    Harness.sweep(spark, Set.empty)
     val bc0 = Eager.broadcastSnapshot(spark)
     // a plain broadcast join with NO release discipline — exactly what
     // assertReleases must catch if an operator regresses
@@ -161,10 +160,10 @@ class ReleaseSpec extends AnyFunSuite with SharedSession {
     assert(leaked.nonEmpty,
       "a broadcast join should leave resident broadcast blocks — if this " +
         "starts passing vacuously the tripwire above is blind")
-    // the Bench/Verify between-queries sweep clears them by handle
-    Eager.releaseBroadcastsSince(spark, bc0, force = true)
+    // the harness's between-queries sweep clears them by handle
+    Harness.sweep(spark, bc0)
     assert((Eager.broadcastSnapshot(spark) -- bc0).isEmpty,
-      "forced sweep did not destroy the leaked broadcast blocks")
+      "the sweep did not destroy the leaked broadcast blocks")
   }
 
   test("containmentPairsIndexed releases its broadcasts and checkpoints like the un-indexed form") {

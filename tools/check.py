@@ -6,8 +6,9 @@ then compare each query's parquet output against the DuckDB oracle
 Usage: python3 tools/check.py [sf_dir] [only_query ...]
 
 With query names, Verify runs only those queries and only they are
-compared. The wall time of the Verify run and of the whole check is
-printed at the end.
+compared. Each compared query's line gives the seconds its DuckDB
+oracle took; the slowest oracles and the wall time of the Verify run
+and of the whole check are printed at the end.
 """
 import json, math, subprocess, sys, os, glob, time
 
@@ -64,6 +65,7 @@ def compare():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     n_ok = n_bad = 0
+    oracle_s = {}
     # rows-only queries (no oracle entry): smoke-check rows > 0, mirroring
     # the driver's weaker check, instead of silently ignoring them
     for d in sorted(glob.glob(f"{OUT}/q_*")):
@@ -94,7 +96,9 @@ def compare():
             got = con.execute(
                 f"SELECT * FROM read_parquet('{OUT}/{name}/*.parquet')").fetchall()
             gcols = [d[0] for d in con.description]
+            t0 = time.monotonic()
             want = con.execute(sql).fetchall()
+            oracle_s[name] = time.monotonic() - t0
             wcols = [d[0] for d in con.description]
         except Exception as e:
             print(f"FAIL {name}: {e}")
@@ -109,11 +113,12 @@ def compare():
         g = sorted((tuple(norm(r[i]) for i in gi) for r in got), key=repr)
         w = sorted((tuple(norm(r[i]) for i in wi) for r in want), key=repr)
         if g == w:
-            print(f"ok   {name} ({len(g)} rows)")
+            print(f"ok   {name} ({len(g)} rows, oracle {oracle_s[name]:.1f} s)")
             n_ok += 1
         else:
             n_bad += 1
-            print(f"FAIL {name}: rows spark={len(g)} oracle={len(w)}")
+            print(f"FAIL {name}: rows spark={len(g)} oracle={len(w)} "
+                  f"(oracle {oracle_s[name]:.1f} s)")
             for a, b in list(zip(g, w))[:2000]:
                 if a != b:
                     print(f"  spark : {a}\n  oracle: {b}")
@@ -122,6 +127,9 @@ def compare():
                 if len(g) != len(w):
                     only_g = [r for r in g[:50] if r not in w[:50]]
                     print("  extra in spark:", only_g[:2])
+    slow = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]
+    print("== slowest oracles: " +
+          ", ".join(f"{n} {t:.1f} s" for n, t in slow) + " ==")
     print(f"== {n_ok} ok, {n_bad} fail ==")
     return n_bad
 
